@@ -76,3 +76,24 @@ def load_checkpoint(spark: SparkSession, root: str, stage: str) -> DataFrame:
 def read_manifest(root: str, stage: str) -> dict:
     with open(os.path.join(root, stage, "_manifest.json")) as fh:
         return json.load(fh)
+
+
+def materialize_probe(df: DataFrame,
+                      rows_per_task: int = 1_000_000) -> DataFrame:
+    """Materialize a request's probe side once, sized to its row count.
+
+    ``df`` is the caller's projection of its input.  ``localCheckpoint``
+    runs the input lineage exactly once (a ``createDataFrame`` list is a
+    Python-worker RDD that every consuming stage would otherwise re-run,
+    and a page-extraction input re-runs its mapInPandas), and every
+    stage downstream then reads the in-memory leaf.  The count is a cheap
+    job over that leaf; coalescing to ``ceil(rows / rows_per_task)``
+    partitions, capped at the current count, makes a single request one
+    task while a large batch keeps its parallelism.  The fewer map tasks
+    also shrink the (map x reduce) shuffle block grid that dominates
+    small batches.
+    """
+    out = df.localCheckpoint(eager=True)
+    parts = out.rdd.getNumPartitions()
+    target = max(1, min(-(-out.count() // rows_per_task), parts))
+    return out.coalesce(target) if target < parts else out

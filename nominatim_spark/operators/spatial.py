@@ -32,6 +32,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from nominatim_spark import grid
@@ -287,6 +288,7 @@ def point_in_polygon_join_dist(
     carry: tuple[str, ...] = (),
     res_tiers: tuple[int, ...] = DEFAULT_TIERS,
     limit: int = 1024,
+    cover: DataFrame | None = None,
 ) -> DataFrame:
     """Fully distributed point-in-polygon join (J5 at planet scale).
 
@@ -302,9 +304,15 @@ def point_in_polygon_join_dist(
 
     Returns ``points`` columns + ``poly_key`` + ``carry`` (extra polygon
     attribute columns riding the key join — saves callers a second join).
+
+    ``cover``: a precomputed :func:`cover_cells_dist` of ``polys`` at the
+    same ``res_tiers``/``limit`` — (poly_key, cell, _full) rows — so a
+    caller that probes the same polygons repeatedly pays for the cover
+    once.
     """
-    cover = cover_cells_dist(polys, poly_key=poly_key, wkb_col=wkb_col,
-                             res_tiers=res_tiers, limit=limit)
+    if cover is None:
+        cover = cover_cells_dist(polys, poly_key=poly_key, wkb_col=wkb_col,
+                                 res_tiers=res_tiers, limit=limit)
     tiers = tuple(sorted(res_tiers))
     pts = points.withColumn(
         "cell",
@@ -451,7 +459,10 @@ def knn_join(
     cand = with_cell(candidates, lon, lat, res).select(
         F.col(cand_key), F.col(lon).alias("_clon"), F.col(lat).alias("_clat"), "cell"
     )
-    cand.persist()
+    # repeated calls over the same candidate plan (one per reverse
+    # request) find it already cached; asking again only logs a warning
+    if cand.storageLevel == StorageLevel.NONE:
+        cand.persist()
     remaining = points.select(point_key, lon, lat)
     results = []
     k = k_cells_start

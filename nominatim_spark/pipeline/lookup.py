@@ -15,6 +15,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from nominatim_spark.io.checkpoint import materialize_probe
 from nominatim_spark.pipeline.placex import IndexTables
 
 _PLACEX_COLS = [
@@ -63,8 +64,12 @@ def lookup_places(spark, idx: IndexTables, refs,
     (find_in_tiger, lookup.py:353-378 — by place_id only, the parent
     street supplies the osm object); first hit wins, rows with no hit
     are absent from the result (the reference drops them the same
-    way)."""
-    r = _norm_refs(spark, refs)
+    way).
+
+    The ref batch is materialized once at entry, since every cascade
+    lane reads it; its later work is JVM joins, so one task serves up to
+    a million refs."""
+    r = materialize_probe(_norm_refs(spark, refs))
 
     px = idx.placex
     if "linked_place_id" in px.columns:

@@ -32,8 +32,8 @@ inherits AQE skew handling plus the salted cover-join helper.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Iterator
+from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,6 +46,9 @@ from nominatim_spark.operators.spatial import (
     explode_bbox_cells, point_in_polygon_join, point_in_polygon_join_dist)
 from nominatim_spark.pipeline.address_levels import DEFAULT_LEVELS
 from nominatim_spark.pipeline.rank import backfill_categories, compute_place_rank
+
+if TYPE_CHECKING:
+    from nominatim_spark.pipeline.reverse import ReverseTables
 
 CELL_RES = 7  # centroid locality key (~870 m cells)
 
@@ -634,6 +637,12 @@ class IndexTables:
     # the diff renames both the name and the wikidata tag (the reference
     # keeps these as placex rows with linked_place_id set)
     linked: DataFrame | None = None
+    # reverse's index-only spatial tables (pipeline/reverse.py), built on
+    # the first reverse call.  Not an __init__ argument, so a
+    # dataclasses.replace copy or a freshly updated index starts empty
+    # and never serves another index's tables.
+    reverse_tables: ReverseTables | None = field(
+        default=None, init=False, repr=False, compare=False)
 
 
 def _linked_slice(px: DataFrame) -> DataFrame | None:

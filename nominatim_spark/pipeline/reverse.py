@@ -28,19 +28,32 @@ scans nearby foreign lines); place-node refinement considers node ranks
 the reference's larger-diameter node ranks are state-level nodes that
 rarely carry reverse results.
 
+Per-index tables: three tables depend only on the index, never on the
+request — the cell cover of the tier-2 areas, the cell cover of the
+tier-3 country polygons, and the refinement place nodes joined to the
+areas that contain them.  They are built and persisted once per
+``IndexTables`` (:class:`ReverseTables`, kept on the index) and filtered
+by ``max_rank`` at query time, so the first reverse on an index pays for
+their build and later calls only probe them.  A ``dataclasses.replace``
+copy or an updated index starts without them and builds its own.  The
+request's points are materialized once at entry as well.
+
 Returns one row per input point with the chosen place + tier label + the
 refined housenumber when one was found.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nominatim_spark.io.checkpoint import materialize_probe
 from nominatim_spark.operators.spatial import (
-    knn_join, point_in_polygon_join_dist)
+    cover_cells_dist, knn_join, point_in_polygon_join_dist)
 from nominatim_spark.pipeline.placex import IndexTables
 
 MAX_STREET_DIST_DEG = 0.006  # reverse.py:322-389 street search radius
@@ -158,6 +171,92 @@ def _line_near_udf():
     return _line_near
 
 
+def _searchable(placex: DataFrame) -> DataFrame:
+    # linked label nodes never surface as reverse results (P5 guard)
+    if "linked_place_id" in placex.columns:
+        return placex.filter(F.col("linked_place_id").isNull())
+    return placex
+
+
+def _areas(placex: DataFrame) -> DataFrame:
+    """Tier-2 candidate areas (rank_address 5..25), every rank_search."""
+    return placex.filter(
+        (F.col("extended_type") == "A") & F.col("rank_address").between(5, 25)
+    ).select(
+        F.col("place_id").alias("a_id"),
+        F.col("rank_address").alias("a_addr"),
+        F.col("rank_search").alias("a_rs"),
+        ((F.col("maxx") - F.col("minx"))
+         * (F.col("maxy") - F.col("miny"))).alias("a_area"),
+        "geometry",
+    )
+
+
+def _countries(placex: DataFrame) -> DataFrame:
+    """Tier-3 country-level polygons (rank_address 1..4)."""
+    return placex.filter(
+        (F.col("extended_type") == "A") & F.col("rank_address").between(1, 4)
+    ).select(
+        F.col("place_id").alias("c_id"),
+        F.col("rank_address").alias("c_addr"),
+        "geometry",
+    )
+
+
+@dataclass
+class ReverseTables:
+    """The index-only inputs of reverse's polygon tiers.
+
+    None depends on the request, so one set, persisted, serves every
+    call; ``max_rank`` filters them at query time.
+    """
+    area_cover: DataFrame     # (a_id, cell, _full, a_rs) of every area
+    country_cover: DataFrame  # (c_id, cell, _full)
+    # refinement nodes with the areas containing them:
+    # (t2_place, n_id, n_rs, n_lon, n_lat)
+    node_area: DataFrame
+
+
+def _reverse_tables(idx: IndexTables) -> ReverseTables:
+    """``idx``'s reverse tables, built and persisted on first use."""
+    if idx.reverse_tables is None:
+        placex = _searchable(idx.placex)
+        areas = _areas(placex)
+        area_cover = cover_cells_dist(areas, poly_key="a_id").join(
+            areas.select("a_id", "a_rs"), "a_id")
+        # place-node refinement candidates (NODE_REFINE_MIN_RANK floor,
+        # see the module docstring)
+        nodes = placex.filter(
+            (F.col("osm_type") == "N")
+            & F.col("rank_address").between(4, 25)
+            & (F.col("rank_search") >= NODE_REFINE_MIN_RANK)
+            & F.col("name").getItem("name").isNotNull()
+        ).select(
+            F.col("place_id").alias("n_id"),
+            F.col("rank_search").alias("n_rs"),
+            F.col("lon").alias("n_lon"), F.col("lat").alias("n_lat"),
+        )
+        node_area = point_in_polygon_join_dist(
+            nodes.select(F.col("n_id").alias("point_id"),
+                         F.col("n_lon").alias("lon"),
+                         F.col("n_lat").alias("lat")),
+            areas.select("a_id", "geometry"), poly_key="a_id",
+            cover=area_cover.drop("a_rs"),
+        ).select(F.col("point_id").alias("n_id"),
+                 F.col("a_id").alias("t2_place")).join(nodes, "n_id")
+        tables = ReverseTables(
+            area_cover=area_cover,
+            country_cover=cover_cells_dist(_countries(placex),
+                                           poly_key="c_id"),
+            node_area=node_area,
+        )
+        for df in (tables.area_cover, tables.country_cover,
+                   tables.node_area):
+            df.persist().count()
+        idx.reverse_tables = tables
+    return idx.reverse_tables
+
+
 def reverse_geocode(
     spark,
     idx: IndexTables,
@@ -186,10 +285,14 @@ def reverse_geocode(
     """
     layers = [ly.lower() for ly in (layers or DEFAULT_LAYERS)]
     has_addr = "address" in layers
-    placex = idx.placex
-    if "linked_place_id" in placex.columns:
-        # linked label nodes never surface as reverse results (P5 guard)
-        placex = placex.filter(F.col("linked_place_id").isNull())
+    placex = _searchable(idx.placex)
+    # every tier reads the points: materialize them once, one task per
+    # Arrow batch of points (tiers re-check rows in Python), so a single
+    # request runs as one task and a large batch keeps its parallelism
+    # (Spark reads a batch size <= 0 as unlimited: the default sizing)
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    points = (materialize_probe(points, batch) if batch > 0
+              else materialize_probe(points))
     pts = points.select(point_key, "lon", "lat")
 
     # ---- tier 1: nearest street/POI within the radius, restricted to
@@ -349,19 +452,12 @@ def reverse_geocode(
     # Country-level polygons (rank_address <= 4) are tier 3 below.
     # Address-layer only (lookup_area, reverse.py:491-516); capped at
     # max_rank like the reference's rank_search <= MAX_RANK_PARAM.
-    areas = placex.filter(
-        (F.col("extended_type") == "A") & F.col("rank_address").between(5, 25)
-        & (F.col("rank_search") <= F.lit(max_rank))
-    ).select(
-        F.col("place_id").alias("a_id"),
-        F.col("rank_address").alias("a_addr"),
-        F.col("rank_search").alias("a_rs"),
-        ((F.col("maxx") - F.col("minx"))
-         * (F.col("maxy") - F.col("miny"))).alias("a_area"),
-        "geometry",
-    )
+    tables = _reverse_tables(idx)
+    areas = _areas(placex).filter(F.col("a_rs") <= F.lit(max_rank))
     hit = point_in_polygon_join_dist(
-        points, areas, poly_key="a_id", carry=("a_addr", "a_area", "a_rs"),
+        pts, areas, poly_key="a_id", carry=("a_addr", "a_area", "a_rs"),
+        cover=tables.area_cover.filter(F.col("a_rs") <= F.lit(max_rank))
+        .drop("a_rs"),
     )
     w = Window.partitionBy(point_key).orderBy(
         F.col("a_addr").desc(), F.col("a_area").asc(), F.col("a_id")
@@ -374,29 +470,13 @@ def reverse_geocode(
 
     # ---- tier 2 refinement: better place node inside the winning area
     # (reverse.py:436-459): rank_search above the area's, within its
-    # rank's reverse diameter of the point, contained in the area.
-    nodes = placex.filter(
-        (F.col("osm_type") == "N")
-        & F.col("rank_address").between(4, 25)
-        & (F.col("rank_search") >= NODE_REFINE_MIN_RANK)
-        & (F.col("rank_search") <= F.lit(max_rank))
-        & F.col("name").getItem("name").isNotNull()
-    ).select(
-        F.col("place_id").alias("n_id"),
-        F.col("rank_search").alias("n_rs"),
-        F.col("lon").alias("n_lon"), F.col("lat").alias("n_lat"),
-    )
-    node_area = point_in_polygon_join_dist(
-        nodes.select(F.col("n_id").alias("point_id"),
-                     F.col("n_lon").alias("lon"),
-                     F.col("n_lat").alias("lat")),
-        areas.select("a_id", "geometry"), poly_key="a_id",
-    ).select(F.col("point_id").alias("n_id"),
-             F.col("a_id").alias("t2_place"))
+    # rank's reverse diameter of the point, contained in the area.  The
+    # winning area already passed the max_rank cap, so only the node's
+    # own rank is capped here.
     nref = (
         t2w.join(pts, point_key)
-        .join(node_area, "t2_place")
-        .join(nodes, "n_id")
+        .join(tables.node_area.filter(F.col("n_rs") <= F.lit(max_rank)),
+              "t2_place")
         .filter(F.col("n_rs") > F.col("a_rs"))
         .withColumn(
             "_nd2",
@@ -454,15 +534,9 @@ def reverse_geocode(
     # ---- tier 3: country containment (the reference's country fallback,
     # reverse.py:520-605 lookup_country) — rank_address 1..4 polygons;
     # address layer only (lookup(): row fallback gated on ADDRESS, :633)
-    countries = placex.filter(
-        (F.col("extended_type") == "A") & F.col("rank_address").between(1, 4)
-    ).select(
-        F.col("place_id").alias("c_id"),
-        F.col("rank_address").alias("c_addr"),
-        "geometry",
-    )
     chit = point_in_polygon_join_dist(
-        points, countries, poly_key="c_id", carry=("c_addr",),
+        pts, _countries(placex), poly_key="c_id", carry=("c_addr",),
+        cover=tables.country_cover,
     )
     wc = Window.partitionBy(point_key).orderBy(
         F.col("c_addr").desc(), F.col("c_id")

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from nominatim_spark.functions.housenumbers import canonical_housenumber
 from nominatim_spark.functions.text import norm_translit
+from nominatim_spark.io.checkpoint import materialize_probe
 from nominatim_spark.pipeline.placex import IndexTables
 
 _HNR_RE = re.compile(r"^(.*?)[ ,]\s*(\d{1,4}(?: ?[a-zA-Z])?)\s*$")
@@ -1537,22 +1538,11 @@ def geocode(spark, idx: IndexTables, queries: DataFrame, **kw) -> DataFrame:
     text_col = kw.get("text_col", "qtext")
     # materialize the (id, text) projection once: both the distinct and
     # the final attach join read it, so an expensive upstream (e.g. the
-    # page-extraction mapInPandas) runs exactly once
-    qsel = queries.select(
-        "query_id", F.col(text_col).alias("_qtext")
-    ).localCheckpoint(eager=True)
-    # right-size the two consumers below from the MEASURED batch size:
-    # they do trivial per-row work (hash, broadcast-probe), so ~1M rows
-    # per task (the guide's ~100 MB partition band for short rows) is
-    # plenty, and fewer map tasks shrink the (map x reduce) shuffle
-    # block grid that dominates small batches (guide §2.2).  The count
-    # is a cheap job over the checkpoint leaf; the target grows linearly
-    # with the batch, so huge batches keep full parallelism.
-    n_queries = qsel.count()
-    target = max(1, min(-(-n_queries // 1_000_000),
-                        qsel.rdd.getNumPartitions()))
-    if target < qsel.rdd.getNumPartitions():
-        qsel = qsel.coalesce(target)
+    # page-extraction mapInPandas) runs exactly once.  The two consumers
+    # do trivial per-row work (hash, broadcast-probe), so ~1M rows per
+    # task (about 100 MB of these short rows) is plenty.
+    qsel = materialize_probe(
+        queries.select("query_id", F.col(text_col).alias("_qtext")))
     uniq = (
         qsel.select(F.col("_qtext").alias(text_col))
         .dropDuplicates([text_col])

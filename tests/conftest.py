@@ -19,6 +19,26 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def input_shapes(spark):
+    """The same rows as every input shape an engine entry point must
+    treat alike: a plain ``createDataFrame``, a cached frame, and a
+    ``localCheckpoint``ed frame with and without a prior ``select``."""
+
+    def shapes(rows, schema):
+        def make():
+            return spark.createDataFrame(rows, schema)
+
+        return {
+            "plain": make(),
+            "cached": make().cache(),
+            "checkpointed": make().localCheckpoint(),
+            "select_checkpointed": make().select("*").localCheckpoint(),
+        }
+
+    return shapes
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

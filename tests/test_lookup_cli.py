@@ -24,7 +24,7 @@ def index(spark, tmp_path_factory):
     return idx, osmline, ckpt
 
 
-def test_lookup_by_osm_ref_and_place_id(spark, index):
+def test_lookup_by_osm_ref_and_place_id(spark, index, input_shapes):
     idx, osmline, _ = index
     street_pid = idx.placex.filter("osm_id = 10000 AND osm_type = 'W'") \
                            .head().place_id
@@ -36,6 +36,23 @@ def test_lookup_by_osm_ref_and_place_id(spark, index):
     assert res[str(street_pid)].place_id == street_pid
     # unresolvable refs are absent (reference drops them too)
     assert "N999999999" not in res
+
+    # the same refs as a DataFrame of any shape, in one batch or one call
+    # per ref, give the same rows
+    rows = [("W10000", None, "W", 10000), ("R100", None, "R", 100),
+            (str(street_pid), street_pid, None, None),
+            ("N999999999", None, "N", 999999999)]
+    schema = "ref_id string, place_id long, osm_type string, osm_id long"
+    want = {k: r.asDict() for k, r in res.items()}
+    for shape, df in input_shapes(rows, schema).items():
+        got = {r.ref_id: r.asDict() for r in lookup_places(
+            spark, idx, df, osmline=osmline).collect()}
+        assert got == want, shape
+    for row in rows:
+        got = lookup_places(spark, idx, spark.createDataFrame([row], schema),
+                            osmline=osmline).collect()
+        assert [r.asDict() for r in got] == (
+            [want[row[0]]] if row[0] in want else [])
 
 
 def test_lookup_osmline_cascade(spark, index):

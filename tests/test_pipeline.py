@@ -133,17 +133,16 @@ def test_osmline_parity_normalization(index):
     assert seg.parent_place_id == 10000 * 4 + 1
 
 
-def test_reverse_geocode(spark, index):
+def test_reverse_geocode(spark, index, input_shapes):
     idx, _ = index
     cx, cy = synth.city_center(1)
-    pts = spark.createDataFrame(
-        [
-            ("on_street", cx - 0.05, cy - 0.1 + 0.0001),  # on street 0 of city 1
-            ("city_center", cx, cy + 0.08),               # inside city, off streets
-            ("rural", 10.9, 48.45),                       # country only
-        ],
-        "point_id string, lon double, lat double",
-    )
+    rows = [
+        ("on_street", cx - 0.05, cy - 0.1 + 0.0001),  # on street 0 of city 1
+        ("city_center", cx, cy + 0.08),               # inside city, off streets
+        ("rural", 10.9, 48.45),                       # country only
+    ]
+    schema = "point_id string, lon double, lat double"
+    pts = spark.createDataFrame(rows, schema)
     res = {r.point_id: r for r in reverse_geocode(spark, idx, pts).collect()}
     assert res["on_street"].tier == "street_poi"
     assert res["on_street"].rank_search >= 26
@@ -153,13 +152,31 @@ def test_reverse_geocode(spark, index):
     assert res["rural"].osm_id in (1, 11)    # country or Ostmark state
     assert res["rural"].country_code == "cv"
 
+    # the answer does not depend on the input's shape, nor on batching
+    want = {k: r.asDict() for k, r in res.items()}
+    for shape, df in input_shapes(rows, schema).items():
+        got = {r.point_id: r.asDict()
+               for r in reverse_geocode(spark, idx, df).collect()}
+        assert got == want, shape
+    for row in rows:
+        got = reverse_geocode(
+            spark, idx, spark.createDataFrame([row], schema)).collect()
+        assert [r.asDict() for r in got] == [want[row[0]]]
+
+    # max_rank < 30: no street/POI tier, so the city area answers
+    res = {r.point_id: r for r in reverse_geocode(
+        spark, idx, pts, max_rank=16).collect()}
+    assert res["on_street"].tier == "area"
+    assert res["on_street"].osm_id == 101
+    assert res["city_center"].osm_id == 101
+
 
 def test_reverse_country_tier(spark, index):
     """Tier 3: a point inside the country but outside every rank-5..25 area
     falls through to the country polygon (reverse.py:520-605)."""
     import dataclasses
 
-    idx, _ = index
+    idx, osmline = index
     # strip states/cities so only the country polygon can contain the point
     thin = dataclasses.replace(
         idx,
@@ -171,11 +188,27 @@ def test_reverse_country_tier(spark, index):
         [("rural", 10.9, 48.45), ("ocean", -30.0, 0.0)],
         "point_id string, lon double, lat double",
     )
-    res = {r.point_id: r for r in reverse_geocode(spark, thin, pts).collect()}
-    assert res["rural"].tier == "country"
-    assert res["rural"].osm_id == 1
-    assert res["ocean"].tier == "none"
-    assert res["ocean"].place_id is None
+    # reverse keeps its per-index tables on each IndexTables: over the
+    # full index, the stripped copy and the full index again, every call
+    # answers from its own index, also once the cache is dropped (conftest
+    # clears it between modules)
+    for clear in (False, True):
+        if clear:
+            spark.catalog.clearCache()
+        for ix in (idx, thin, idx):
+            res = {r.point_id: r
+                   for r in reverse_geocode(spark, ix, pts).collect()}
+            assert res["ocean"].tier == "none"
+            assert res["ocean"].place_id is None
+            if ix is thin:
+                assert res["rural"].tier == "country"
+                assert res["rural"].osm_id == 1
+            else:
+                assert res["rural"].tier == "area"
+    # restore the module fixture's cached tables
+    idx.placex.persist().count()
+    idx.search_name.persist().count()
+    osmline.persist().count()
 
 
 def test_extraction_byte_identity(spark):
@@ -376,6 +409,17 @@ def test_reverse_place_node_refinement(spark, index):
     assert res["near_suburb"]["type"] == "suburb"
     assert res["mid_city"].tier == "area"
     assert res["mid_city"].osm_id == 100
+
+    # suburb nodes rank above 16: capped at the city's rank, the city
+    # answers; at 12 the state does
+    res = {r.point_id: r for r in reverse_geocode(
+        spark, idx, pts, max_rank=16).collect()}
+    assert res["near_suburb"].tier == "area"
+    assert res["near_suburb"].osm_id == 100
+    res = {r.point_id: r for r in reverse_geocode(
+        spark, idx, pts, max_rank=12).collect()}
+    assert res["near_suburb"].tier == "area"
+    assert res["near_suburb"].osm_id in (10, 11)
 
 
 def test_reverse_layers_address_skips_poi(spark, index):

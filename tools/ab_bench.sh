@@ -1,4 +1,7 @@
 #!/bin/bash
+# LEGACY: drives the legacy bench.py (TPC-H-style gate queries), not the
+# geocoder benchmark.  For perfbench A/Bs use tools/ab_perfbench.py.
+#
 # Interleaved whole-bench A/B: alternate the round-5 tree vs the current
 # tree, fresh process per invocation, running each tree's OWN bench.py
 # (identical frozen file in both trees) at sf0.1.  Interleaving makes

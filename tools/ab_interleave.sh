@@ -1,4 +1,8 @@
 #!/bin/bash
+# LEGACY: drives the legacy bench.py flagship protocol (through
+# tools/ab_flagship.py), not the geocoder benchmark.  For perfbench
+# A/Bs use tools/ab_perfbench.py.
+#
 # Interleaved whole-job flagship A/B: alternate r3 tree vs current tree,
 # fresh JVM per invocation, 3 timed runs inside each invocation,
 # 3 invocations per arm => 9 timed samples per arm, interleaved so host
